@@ -1615,6 +1615,7 @@ def coverage_greedy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand = (
             terms
             if not picked_ids
+            # documents.doc_id is never NULL, so ~isin drops no unpicked row
             else terms.where(~F.col("doc_id").isin(picked_ids))
         )
         if picked_ids:

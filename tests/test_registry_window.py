@@ -1,15 +1,15 @@
-"""The r9 driver window must be well-formed: 50 entries, all resolvable,
-no duplicates, no registry entry lost by the reorder; the ledger is
-complete since r8 (336/336 driver records), so every r9 slot must spend
-itself on the CURRENCY rotation — an r1–r3-vintage record or a contract
-change (pca_embeddings late-r8; ivf_topk / pq_topk tightened r9)."""
+"""The query registry must be well-formed: queries() serves its one dict
+literal as declared, with no repeated key, the 50-entry check window
+at its head, and every name bound to a callable."""
 
+import ast
 import json
 import os
 
 import __spark_entry__ as entrymod
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WINDOW = 50
 
 
 def _records_through(last_round):
@@ -21,36 +21,61 @@ def _records_through(last_round):
     return rec
 
 
+def _registry_source():
+    with open(entrymod.__file__) as f:
+        return f.read()
+
+
+def _registry_keys(src):
+    """(name, line) for each key of the dict literal inside queries()."""
+    tree = ast.parse(src)
+    fn = next(
+        n
+        for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "queries"
+    )
+    d = next(n for n in ast.walk(fn) if isinstance(n, ast.Dict))
+    return [(k.value, k.lineno) for k in d.keys]
+
+
 def test_window_names_resolve_and_lead():
-    """r10: the r9 driver record landed (CORRECTNESS_r09, 0 red), so
-    queries() now serves the pre-staged _R10_QUEUE as the driver
-    correctness window; _R9_WINDOW stays as the r9 ledger map."""
+    """The window is the head of the literal: the end-of-window marker
+    sits between entry 50 and entry 51, and every window name maps to
+    a callable."""
+    src = _registry_source()
+    keys = _registry_keys(src)
+    assert len(keys) >= WINDOW, f"registry has only {len(keys)} entries"
+    marker = next(
+        i
+        for i, line in enumerate(src.splitlines(), start=1)
+        if "end of 50-entry check window" in line
+    )
+    assert keys[WINDOW - 1][1] < marker < keys[WINDOW][1], (
+        "end-of-window marker must follow entry 50"
+    )
     q = entrymod.queries()
-    names = list(q)
-    win = entrymod._R10_QUEUE
-    assert len(win) == len(set(win)), "duplicate names in _R10_QUEUE"
-    assert len(win) == 50, f"driver checks exactly 50; window has {len(win)}"
-    assert names[: len(win)] == win, "window must lead the registry"
-    r9 = entrymod._R9_WINDOW
-    assert len(r9) == len(set(r9)) == 50, "_R9_WINDOW ledger map malformed"
-
-
-def test_reorder_loses_nothing():
-    q = entrymod.queries()
-    assert len(q) >= 336
-    # every window name maps to a callable
-    for name in entrymod._R9_WINDOW + entrymod._R10_QUEUE:
+    for name, _ in keys[:WINDOW]:
         assert callable(q[name]), name
 
 
-def _latest_vintage(name, through=8):
-    latest = None
-    for r in range(1, through + 1):
-        path = os.path.join(HERE, f"CORRECTNESS_r0{r}.json")
-        with open(path) as f:
-            if name in json.load(f):
-                latest = r
-    return latest
+def test_reorder_loses_nothing():
+    """queries() serves the literal as declared: same names, same order,
+    every one bound to a callable."""
+    q = entrymod.queries()
+    assert len(q) >= 336
+    assert list(q) == [name for name, _ in _registry_keys(_registry_source())]
+    for name, fn in q.items():
+        assert callable(fn), name
+
+
+def test_registry_literal_has_no_duplicate_keys():
+    """A repeated key in a dict literal keeps its FIRST position and its
+    LAST value, so an entry copied into the window without deleting the
+    original passes every order and callable check while the second
+    line is dead."""
+    names = [name for name, _ in _registry_keys(_registry_source())]
+    dups = sorted({n for n in names if names.count(n) > 1})
+    assert not dups, f"repeated registry keys: {dups}"
 
 
 def test_ledger_complete_through_r8():
@@ -58,36 +83,6 @@ def test_ledger_complete_through_r8():
     currency-rotation precondition."""
     missing = set(entrymod.queries()) - _records_through(8)
     assert not missing, f"entries with no driver record: {sorted(missing)}"
-
-
-def test_window_spends_slots_on_stale_or_changed():
-    """The currency-rotation contract: every r9 window slot either
-    refreshes an r1–r3-vintage record (oldest first) or re-checks a
-    contract change (pca_embeddings tightened late-r8 after the r8
-    window froze; ivf_topk / pq_topk tightened to oracle-paired
-    contract faces in r9)."""
-    contract_changes = {"pca_embeddings", "ivf_topk", "pq_topk"}
-    for name in entrymod._R9_WINDOW:
-        if name in contract_changes:
-            continue
-        v = _latest_vintage(name)
-        assert v is not None and v <= 3, (
-            f"{name} spends a slot on an already-current record "
-            f"(latest vintage r{v})"
-        )
-
-
-def test_window_heads_with_r1_stragglers():
-    """The four entries whose latest record is still r1-vintage (the
-    r7/r8 slot-swap displacements) must head the rotation."""
-    assert entrymod._R9_WINDOW[:4] == [
-        "dedup_first_event",
-        "distinct_projection",
-        "customers_without_orders",
-        "sliding_hourly",
-    ]
-    for name in entrymod._R9_WINDOW[:4]:
-        assert _latest_vintage(name) == 1
 
 
 def test_oracle_sql_values_have_no_doubled_backslash():
